@@ -48,7 +48,8 @@ DAILY_TS0 = datetime(2025, 12, 1)
 MONTH_ENDS = ["2025-10-31", "2025-11-30"]
 MID_MONTHS = ["2025-10-15", "2025-11-14", "2025-12-10"]
 LATE_ENDS = ["2025-07-10", "2025-07-31", "2025-08-19"]
-# the late rows reach back to July: restate six months before December
+# the late rows reach back to June (late starts from 2025-06-01, late
+# ends in July and August): restate from June, six months before December
 LATE_REPROCESS_MONTHS = 6
 
 INDUSTRIES = ["DevTools", "FinTech", "Cybersecurity", "HealthTech", "EdTech"]
@@ -288,7 +289,7 @@ class DailyBatches:
         rows.append(ch)
         owners = np.concatenate([new_acc_ids, rng.choice(self.accounts.index.to_numpy(), 12)])
         rows.append(_sub_rows(rng, _ids(rng, f"S-{k:x}-", 10), owners[:10], "2025-10-01", "2025-12-20", 10))
-        rows.append(_sub_rows(rng, _ids(rng, f"L-{k:x}-", 5), owners[10:], "2025-05-01", "2025-08-31", 5))
+        rows.append(_sub_rows(rng, _ids(rng, f"L-{k:x}-", 5), owners[10:], "2025-06-01", "2025-08-31", 5))
         for df in rows:
             self.subs = pd.concat([self.subs.drop(df["subscription_id"], errors="ignore"), df.set_index("subscription_id", drop=False)])
         # unchanged re-arrivals: same payload after staging's cleaning

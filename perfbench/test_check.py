@@ -26,7 +26,7 @@ SUB2 = "SUB2,ACC2,2024-01-20,2024-02-29,Basic,5,50.0,600.0,false,false,false,tru
 # re-arrival of SUB2 with staging-only differences: padded id, upper case
 SUB2_AGAIN = " SUB2,ACC2,2024-01-20,2024-02-29,Basic,5,50.0,600.0,False,False,False,True,MONTHLY,False"
 SUB3 = "SUB3,ACC3,2024-01-05,,Basic,2,0.0,0.0,true,false,false,false,monthly,true"
-SUB4 = "SUB4,ACC2,2024-04-01,,Pro,6,80.0,960.0,false,false,false,false,annual,true"
+SUB4 = "SUB4,ACC2,2024-03-01,,Pro,6,80.0,960.0,false,false,false,false,annual,true"
 SUB5 = "SUB5,ACC1,2024-02-01,2024-02-15,Basic,3,30.0,360.0,false,false,false,true,monthly,false"
 # a negative amount counts as 0
 SUB6 = "SUB6,ACC3,2024-03-01,,Basic,1,-40.0,-480.0,false,false,false,false,monthly,true"
@@ -43,10 +43,12 @@ EXPECTED = [
     # B1: SUB1 100 from Jan; SUB2 50 through Feb (ends on Feb's last
     # day, so it counts in Feb); SUB3 a trial; SUB5 ends mid-Feb
     {1: (150.0, 2), 2: (150.0, 2), 3: (100.0, 1), 4: (100.0, 1), 5: (100.0, 1), 6: (100.0, 1)},
-    # B2: SUB1 now 120 in every month (current truth); SUB4 80 from Apr
-    {1: (170.0, 2), 2: (170.0, 2), 3: (120.0, 1), 4: (200.0, 2), 5: (200.0, 2), 6: (200.0, 2)},
+    # B2: SUB1 now 120 in every month (current truth); SUB4 reactivates
+    # ACC2 with 80 from March, after SUB2's Feb-end churn; SUB6's
+    # negative amount counts as 0, so ACC3 is not active
+    {1: (170.0, 2), 2: (170.0, 2), 3: (200.0, 2), 4: (200.0, 2), 5: (200.0, 2), 6: (200.0, 2)},
     # B3: SUB1 ends 2024-04-10, before April's month end
-    {1: (170.0, 2), 2: (170.0, 2), 3: (120.0, 1), 4: (80.0, 1), 5: (80.0, 1), 6: (80.0, 1)},
+    {1: (170.0, 2), 2: (170.0, 2), 3: (200.0, 2), 4: (80.0, 1), 5: (80.0, 1), 6: (80.0, 1)},
 ]
 
 

@@ -62,8 +62,10 @@ def _ts(s: str) -> datetime:
 def traced_warehouse(spark, root: str, tracer):
     """A ``sources.tables.Warehouse`` whose writes run inside spans, so
     the sources layer's write path is measured where the pipeline calls
-    it. When tracing, the files each write adds or replaces are counted
-    from the table directory before and after."""
+    it. When tracing, the files each write adds or replaces, and the rows
+    in them, are counted from the table directory before and after."""
+    import pyarrow.parquet as pq
+
     from duckdb_dbt_finance_warehouse_spark.sources.tables import Warehouse
 
     class TracedWarehouse(Warehouse):
@@ -77,6 +79,7 @@ def traced_warehouse(spark, root: str, tracer):
                     s["files"] = len(new)
                     s["bytes"] = sum(new.values())
                     s["partitions"] = len({os.path.dirname(p) for p in new})
+                    s["rows"] = sum(pq.ParquetFile(p).metadata.num_rows for p in new if p.endswith(".parquet"))
 
         def write(self, df, schema, table, *a, **kw):
             self._traced("write", schema, table, lambda: Warehouse.write(self, df, schema, table, *a, **kw))
@@ -186,16 +189,18 @@ class WarehouseDaily:
     # -- workload protocol -----------------------------------------------
     def setup(self) -> None:
         seed = self.ctx.seed
-        base = gen.base_feeds(seed, 1.0)
-        paths = {}
-        os.makedirs(self.ctx.path("inputs/base"), exist_ok=True)
-        for feed in DAILY_FEEDS:
-            paths[feed] = self.ctx.path(f"inputs/base/{feed}.csv")
-            gen.write_csv(base[feed], paths[feed])
-        self.stream = gen.DailyBatches(seed, base)
+        with self.ctx.own():
+            base = gen.base_feeds(seed, 1.0)
+            paths = {}
+            os.makedirs(self.ctx.path("inputs/base"), exist_ok=True)
+            for feed in DAILY_FEEDS:
+                paths[feed] = self.ctx.path(f"inputs/base/{feed}.csv")
+                gen.write_csv(base[feed], paths[feed])
+            self.stream = gen.DailyBatches(seed, base)
         self.land(paths, gen.BASE_TS, "replace")
         self.build({}, True)
-        bad = self.verify(SPINE)
+        with self.ctx.own():
+            bad = self.verify(SPINE)
         if bad:
             self.ctx.correct = False
             self.ctx.note_failures(bad)
@@ -266,22 +271,24 @@ class OperatorSuite:
         from duckdb_dbt_finance_warehouse_spark.sources.tables import TESTDATA_TABLES
         from duckdb_dbt_finance_warehouse_spark.suite import REGISTRY
 
-        self.data = gen.write_testdata(self.ctx.path("inputs/testdata"), self.ctx.seed, SUITE_SCALE)
+        with self.ctx.own():
+            self.data = gen.write_testdata(self.ctx.path("inputs/testdata"), self.ctx.seed, SUITE_SCALE)
+            register_testdata(self.ctx.duck, self.data, TESTDATA_TABLES)
         self.specs = {n: REGISTRY[n] for n in SUITE_ENTRIES}
-        register_testdata(self.ctx.duck, self.data, TESTDATA_TABLES)
         for name, spec in self.specs.items():
             with self.tracer.span(name, "suite.first_run"):
                 df = spec.fn(self.spark, self.data)
                 rows, cols = df.collect(), df.columns
             release_persisted()
-            oracle = spec.resolved_oracle(self.data)
-            if oracle is not None:
-                problems = suite_parity(self.ctx.duck, oracle, rows, cols)
-                if problems:
-                    self.bad.add(name)
-                    self.ctx.note_failures([f"{name}: {problems[0]}"])
-            df = rows = None
-            gc.collect()
+            with self.ctx.own():
+                oracle = spec.resolved_oracle(self.data)
+                if oracle is not None:
+                    problems = suite_parity(self.ctx.duck, oracle, rows, cols)
+                    if problems:
+                        self.bad.add(name)
+                        self.ctx.note_failures([f"{name}: {problems[0]}"])
+                df = rows = None
+                gc.collect()
 
     def round(self, r: int) -> tuple[int, int]:
         self.ctx.quiesce()
